@@ -20,23 +20,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession(cpus)
 
     // calibration anchor (r14 verdict #2): a fixed-work CPU probe stamped at
     // the start and end of the run lets bench_diff normalize per-query ratios
     // by measured host speed instead of adjudicating "host drift" per round
     val calibStart1 = graft.util.Calibrate.singleThreadSec()
-    val calibStartN = graft.util.Calibrate.multiThreadSec(cpus.toInt)
+    val calibStartN = graft.util.Calibrate.multiThreadSec(cpus)
 
     // SPARK_GRAFT_ONLY=prefix1,prefix2 → targeted timing while iterating
     // (driver never sets it; its runs always time the full registry)
@@ -105,9 +96,9 @@ object Bench {
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + d3(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val calibEnd1 = graft.util.Calibrate.singleThreadSec()
-    val calibEndN = graft.util.Calibrate.multiThreadSec(cpus.toInt)
+    val calibEndN = graft.util.Calibrate.multiThreadSec(cpus)
     val calib = graft.util.Calibrate.recordJson(
-      calibStart1, calibStartN, calibEnd1, calibEndN, cpus.toInt)
+      calibStart1, calibStartN, calibEnd1, calibEndN, cpus)
     // self-describing interference (round-15 verdict #7): when the START
     // probes sit >25% above the newest committed BENCH_LOCAL record's band,
     // the run's head was measured on a loaded host — say so IN the artifact

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.expressions.{BagMerge, BetaCdf, BetaInv, BottomKValues, CountofScan, GammaFn, LogGammaFn, ParseCsv, RankTDigest, FreqAgg, FreqMergeAgg, FreqTopK, SampleBottomKAgg, SampleBottomKMergeAgg, ThetaAgg, ThetaMergeAgg, ThetaEstimate, ThetaIntersect, ThetaDiff, BagRemoveKeys, BloomContains, DynamicToJson, GeoPointToGeohash, GeohashCentralPoint, GeohashNeighbors, GeohashToPolygon, ParseCommandLine, Base64DecodeToArray, Base64EncodeFromArray, GeoS2CellNeighbors, GeoS2CellToPolygon, GeoPolygonToS2Cells, GeoLineToS2Cells, GeoClosestPointOnLine, GeoLineDensify, GeoPolygonDensify, GeoLineSimplify, GeoPolygonSimplify, GeoPointBuffer, GeoLineBuffer, GeoPolygonBuffer, GeoIntersection2Polygons, GeoUnion2Polygons, GeoIntersection2Lines, GeoIntersectionLineWithPolygon, GeoUnionPolygonsArray, GeoSimplifyPolygonsArray, GeoUnionLinesArray, GeoS2CellParent, GeoS2CellChildren, TreePath, BuildSchemaAgg, GramHashes, MinHashSig, GzipCompress, GzipDecompress, Ipv4RangeToCidr, Ipv6Norm, ParseXml, PercentileTDigest, PunycodeDomainFrom, PunycodeDomainTo, PunycodeEncode, PunycodeDecode, RollingHash, S2CellCentralPoint, GeoPointToS2Cell, SeriesFft, SeriesIfft, SeriesFitPoly, TDigestAgg, TDigestMergeAgg, TermHas, VectorDot, WelchTest, ZlibCompress, ZlibDecompress}
 
 /** Spark plugin entry point: load with
-  * `spark.sql.extensions=graft.GraftSessionExtensions` (works with plain
-  * `SparkSession.builder.config(...)` and spark-submit alike). Registers the
+  * `spark.sql.extensions=graft.GraftSessionExtensions` (`graft.GraftSession`
+  * sets it; a spark-submit `--conf` works alike). Registers the
   * engine's native Catalyst expressions so they are usable from SQL text,
   * `expr()`, and `call_function` on any session — the SparkSessionExtensions
   * path SURVEY §7 reserves for operators Spark can't express natively.

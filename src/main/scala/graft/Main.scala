@@ -2,8 +2,6 @@ package graft
 
 import java.time.{Instant, LocalDate, ZoneOffset}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.{MirrorConfig, MirrorOrchestration}
 
 /** CLI entry point — the Spark restatement of the reference's invocation
@@ -104,14 +102,7 @@ object Main {
             "[--optimize-every N] [--optimize-small-files M]")
         sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .appName(s"graft-mirror-${o.table}")
-      // spark-submit injects the real master; default for bare runMain
-      .master(sys.props.getOrElse("spark.master", sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(4)
 
     val cfgs = o.specs.map { s =>
       MirrorConfig(

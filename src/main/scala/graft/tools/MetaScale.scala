@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.deltalog.{DeltaLogReader, DeltaLogWriter}
 import graft.engine.{MirrorConfig, MirrorOrchestrator}
 import graft.txlog.TxLog
@@ -94,15 +95,8 @@ object MetaScale {
     val workDir = args(0)
     val nCkpt   = if (args.length > 1) args(1).toInt else 1000000
     val nBlobs  = if (args.length > 2) args(2).toInt else 100000
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark   = GraftSession(cpus)
     startHeapSampler()
 
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -149,7 +143,7 @@ object MetaScale {
     // comparison must normalize by (r16 verdict #1)
     val floorFiles = math.min(nBlobs, 100000)
     val calibStart1 = graft.util.Calibrate.singleThreadSec()
-    val calibStartN = graft.util.Calibrate.multiThreadSec(cpus.toInt)
+    val calibStartN = graft.util.Calibrate.multiThreadSec(cpus)
     val ioFloorPre = ioFloorSec(spark, tableB, floorFiles)
     graft.util.PhaseTimer.reset()
     val (batches, e2eSec) = timed(orch.runOnce())
@@ -180,7 +174,7 @@ object MetaScale {
     // normalized figure divides by
     val ioFloorPost = ioFloorSec(spark, tableB, floorFiles)
     val calibEnd1 = graft.util.Calibrate.singleThreadSec()
-    val calibEndN = graft.util.Calibrate.multiThreadSec(cpus.toInt)
+    val calibEndN = graft.util.Calibrate.multiThreadSec(cpus)
     val ioFloorMean = (ioFloorPre + ioFloorPost) / 2.0
     // dimensionless: E2E per-file cost over the floor's per-file cost
     // (r15: 337.6s/10⁶ over 33.3s/10⁵ = 1.01; r16: 481s/10⁶ over
@@ -237,7 +231,7 @@ object MetaScale {
       f""""e2e_per_file_over_floor":$e2ePerFileOverFloor%.3f,""" +
       f""""store_append_in_window_sec":$appendSec%.3f},""" +
       s""""calib":${graft.util.Calibrate.recordJson(
-             calibStart1, calibStartN, calibEnd1, calibEndN, cpus.toInt)},""" +
+             calibStart1, calibStartN, calibEnd1, calibEndN, cpus)},""" +
       f""""e2e_breakdown":$breakdown,""" +
       f""""store_compaction":{"raw_rows":$rawRows,"raw_mb":${rawBytes / 1048576.0}%.1f,""" +
       f""""compact_sec":$compactSec%.3f,"live_rows":$liveRows,""" +

@@ -4,10 +4,10 @@ import java.nio.charset.StandardCharsets
 import java.time.Instant
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
+import graft.GraftSession
 import graft.deltalog.DeltaLogWriter
 import graft.engine.{MirrorConfig, MirrorOrchestrator}
 import graft.state.CheckpointStore
@@ -67,15 +67,7 @@ object MetaSteady {
     val steadyBatches = if (args.length > 2) args(2).toInt else 50
     val controlBatches = if (args.length > 3) args(3).toInt else 10
     val blobsPerBatch = if (args.length > 4) args(4).toInt else 20
-    val cpus          = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark         = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(workDir), true)

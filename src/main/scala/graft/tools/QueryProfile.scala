@@ -1,13 +1,14 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-/** Generic per-query adjudication instrument — the SpansProfile/KmeansProfile
-  * pattern for ANY registry query, so a bench watch item costs one command
-  * instead of a new tool per round: run the exact gated query `reps` times in
-  * one JVM against `dir` and print per-rep wall/gc plus per-JOB wall / summed
-  * executor task time / max single task / task count.
+import graft.GraftSession
+
+/** Generic per-query adjudication instrument for ANY registry query, so a
+  * bench watch item costs one command instead of a new tool per round: run
+  * the exact gated query `reps` times in one JVM against `dir` and print
+  * per-rep wall/gc plus per-JOB wall / summed executor task time / max
+  * single task / task count.
   *
   * Reads: a straggler task (maxTask ≫ run/tasks) names skew; wall ≫ execRun
   * names scheduling gaps or I/O waits; rep-1-only cost names warm-up; uniform
@@ -73,18 +74,7 @@ object QueryProfile {
     val name = args(0)
     val dir  = args(1)
     val reps = if (args.length > 2) args(2).toInt else 6
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same broadcast posture as the committed Bench/ScaleBench records
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val timer = new JobTimer
     spark.sparkContext.addSparkListener(timer)
 

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+
+import graft.GraftSession
 
 /** Scale-proof bench (`ScaleBench <smallDir> <bigDir> [scale]`): times the
   * headline queries plus the registry's historically most expensive ones at
@@ -67,24 +68,8 @@ object ScaleBench {
     val small = args(0)
     val big   = args(1)
     val scale = if (args.length > 2) args(2).toDouble else 10.0
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // STATIC broadcast threshold stays at Spark's 10 MB default: at the
-      // 100× replica, planning-time size estimates on cached/derived frames
-      // undercount by orders of magnitude, and a misestimated broadcast of
-      // a corpus-sided frame is a driver OOM (the round-9 SF10 failure).
-      // Runtime-measured broadcasts stay generous: AQE converts shuffle
-      // joins to broadcast at up to 64 MB of ACTUAL size — safe by
-      // construction, since the size is known before the build.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession(cpus)
 
     // SPARK_GRAFT_SCALE_ONLY=prefix1,prefix2 — targeted re-runs while
     // iterating on one query's scale posture (full suite for records)
@@ -125,8 +110,9 @@ object ScaleBench {
 
     // JIT code-cache occupancy (all CodeHeap segments, MB) — the r12
     // embed_kmeans 143% SF10 draw adjudicated to COMPILATION state, not
-    // scheduling or GC (tools.KmeansProfile: rep-1 cold 11 s vs 4.1 s
-    // steady, maxTask uniform, gc negligible): a one-JVM 41-query suite
+    // scheduling or GC (per-rep profile, now `tools.QueryProfile embed_kmeans
+    // <dir>`: rep-1 cold 11 s vs 4.1 s steady, maxTask uniform, gc
+    // negligible): a one-JVM 41-query suite
     // can exhaust the default 240 MB cache, disabling/evicting compiled
     // code for everything measured after, which min-of-two cannot absorb.
     // Recording usage per query makes that state visible in the record.
@@ -181,11 +167,11 @@ object ScaleBench {
     // calibration anchor (r14 verdict #2): fixed-work probe before and after
     // the measured sweeps, so the committed record carries host speed
     val calibStart1 = graft.util.Calibrate.singleThreadSec()
-    val calibStartN = graft.util.Calibrate.multiThreadSec(cpus.toInt)
+    val calibStartN = graft.util.Calibrate.multiThreadSec(cpus)
     val smallT = timeAt(small, maxReps = 4)
     val bigT   = timeAt(big, maxReps = 2)
     val calibEnd1 = graft.util.Calibrate.singleThreadSec()
-    val calibEndN = graft.util.Calibrate.multiThreadSec(cpus.toInt)
+    val calibEndN = graft.util.Calibrate.multiThreadSec(cpus)
     def d3(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     val per = names.map { n =>
       val (s, _, _)  = smallT(n); val (b, bg, cc) = bigT(n)
@@ -207,7 +193,7 @@ object ScaleBench {
     // it (1:1, per-query) so a copy-pasted or stale note can't ride along
     val timedJson = names.map("\"" + _ + "\"").mkString("[", ",", "]")
     val calib = graft.util.Calibrate.recordJson(
-      calibStart1, calibStartN, calibEnd1, calibEndN, cpus.toInt)
+      calibStart1, calibStartN, calibEnd1, calibEndN, cpus)
     println(s"""{"queries":$per,"metric":"median_ratio","value":${d3(med)},""" +
       s""""unit":"x","scale":$scale,"small":"$small","big":"$big",""" +
       s""""timed":$timedJson,"calib":$calib,""" +

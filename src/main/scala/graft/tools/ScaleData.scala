@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Build an N× replica of a driver testdata dir for SCALE benchmarking
   * (`ScaleData <srcDir> <dstDir> <copies>`): each fact table unions
@@ -24,20 +26,15 @@ import org.apache.spark.sql.functions._
   *
   * Timestamps are left as-is: an N× replica then has N× the rows per
   * time bin — the realistic shape for a busier cluster over the same
-  * window — and the parquet time encodings round-trip unchanged.
+  * window. A MICROS time column round-trips unchanged; a NANOS one is read
+  * (nanosAsLong) and written back as its epoch-nanos LONG.
   */
 object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, copiesS) = args
     val copies = copiesS.toInt
     require(copies >= 1 && copies <= 100, s"copies out of range: $copies")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
 

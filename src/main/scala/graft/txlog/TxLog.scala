@@ -25,7 +25,7 @@ final case class TxLog(
   // O(1), NOT allItems.head: allItems concatenates every stream, so an
   // accessor built on it copies O(n) items PER CALL — at 10⁶ add-files the
   // checkpoint-delta's per-item tx-range stamp turned that into 10¹¹
-  // element copies (261 s measured, tools.TxProfile round 12). All three
+  // element copies (261 s measured in round 12). All three
   // fields are range-constant across the log's items by construction.
   private def firstItem: TransactionItem =
     adds.headOption.orElse(removes.headOption).orElse(metadata).orElse(stagingTable)
